@@ -86,17 +86,38 @@ def test_hand_checked(spark):
     assert got[4]["dup_line_frac"] == 0.0
 
 
-def test_matches_brute_on_hand_rows(spark):
+DEFAULT_NS = dict(top_ns=(2, 3, 4), dup_ns=(5, 6, 7, 8, 9, 10))
+UNIGRAM_NS = dict(top_ns=(1, 2), dup_ns=(1, 3))
+
+
+@pytest.mark.parametrize(
+    "exact,ns",
+    [
+        (False, DEFAULT_NS),
+        (False, UNIGRAM_NS),
+        (True, DEFAULT_NS),
+        (True, UNIGRAM_NS),
+    ],
+    ids=["default-ns", "default-unigram", "exact-ns", "exact-unigram"],
+)
+def test_matches_brute_on_hand_rows(spark, exact, ns):
     rows = [
         (1, "a b a b a b a b"),
         (2, "x\nx\ny\n\nz z z z z z z z z z"),
         (4, "unique words only here today"),
         (5, "p q r s t p q r s t p q r s t"),
+        # non-ASCII tokens: lengths are code points (JVM length()); only
+        # ASCII whitespace, since Java's \s is ASCII and Python's is not
+        (6, "é ü é ü z"),
     ]
     df = spark.createDataFrame(rows, "id long, text string")
-    got = {r.id: r.asDict() for r in pj.gopher_repetition(df, "id", "text").collect()}
+    got = {
+        r.id: r.asDict()
+        for r in pj.gopher_repetition(df, "id", "text", exact=exact, **ns).collect()
+    }
+    brute = _brute_exact if exact else _brute
     for i, t in rows:
-        want = _brute(t)
+        want = brute(t, **ns)
         for k, v in want.items():
             assert got[i][k] == pytest.approx(v, abs=1e-12), (i, k)
 
@@ -133,6 +154,11 @@ def test_validates(spark):
     df = spark.createDataFrame([(1, "a")], "id long, text string")
     with pytest.raises(ValueError):
         pj.gopher_repetition(df, "id", "text", top_ns=(0,), dup_ns=())
+    # a repeated n would name the same output column twice
+    for ns in (dict(top_ns=(2, 2), dup_ns=(5,)), dict(top_ns=(2,), dup_ns=(5, 5))):
+        for exact in (False, True):
+            with pytest.raises(ValueError):
+                pj.gopher_repetition(df, "id", "text", exact=exact, **ns)
 
 
 def _brute_exact(text: str, top_ns=(2, 3), dup_ns=(2, 5)):

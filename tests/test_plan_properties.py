@@ -341,13 +341,6 @@ def test_registry_generate_broadcast_lint(spark):
         # never exchanges.  broadcast_model=False restores SMJ for a
         # corpus whose pruned model exceeds broadcast limits.
         "ngram_lm_score",
-        # per-doc n-gram fraction table: one row per doc_id (LINEAR in
-        # the scan; the estimate tracks the input, so at real scale the
-        # planner switches to sort-merge on its own).  exact mode joins
-        # back the span-union fraction table — one row per (doc, n),
-        # same linear class (reviewed r12: LeftOuter BuildRight on
-        # doc_id)
-        "gopher_repetition", "gopher_repetition_exact",
     }
     bad = {}
     for name, q in e.queries().items():
